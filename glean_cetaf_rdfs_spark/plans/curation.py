@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.piiscan import pii_gate
 from ..operators.spandedup import remove_repeated_spans
 from ..operators.textops import quality_counts
+from ..session import local_frame
 
 
 # md5(NULL) is NULL; a NULL fingerprint would fall out of the equi-join
@@ -168,8 +169,8 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         row01 = (fp.agg(F.count(F.lit(1)).alias("n"))
                  .select(F.lit("01_pii_clean").alias("stage"), "n"))
     elif obs01 is not None:
-        row01 = spark.createDataFrame(
-            [("01_pii_clean", int(obs01.get["n"]))], "stage string, n long")
+        row01 = local_frame(spark, [("01_pii_clean", int(obs01.get["n"]))],
+                            "stage string, n long")
     else:
         row01 = (pii_clean.agg(F.count(F.lit(1)).alias("n"))
                  .select(F.lit("01_pii_clean").alias("stage"), "n"))
@@ -205,7 +206,7 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
     """Materialize the curated corpus and account for it — the curation
     analog of ``run_pipeline`` (plans/pipeline.py): write the survivors
     partitioned by source, and when ``lineage_path`` is given append one
-    lineage row per funnel stage in the engine's standard
+    lineage row per funnel stage, all in one write, in the engine's standard
     (rows_in, rows_out, rows_dropped) schema with the
     rows_in == rows_out + rows_dropped invariant per row (the span
     stage rewrites text without dropping rows, so it reports
@@ -228,14 +229,14 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
                  ("00_input", "01_pii_clean", "01b_decontaminated",
                   "02_unique", "04_quality_pass", "05_repetition_pass")
                  if s in f]
+        rows = []
         for (_, n0), (s1, n1) in zip(chain, chain[1:]):
-            _append_ckpt(spark, lineage_path, run_id, stage_names[s1],
-                         "all", n0, n1, n0 - n1, "done")
+            rows.append((stage_names[s1], "all", n0, n1, n0 - n1))
             if s1 == "02_unique":
                 # span rewrite preserves rows; its token accounting
                 # lives in the funnel/q51
-                _append_ckpt(spark, lineage_path, run_id, "span_rewrite",
-                             "all", n1, n1, 0, "done")
+                rows.append(("span_rewrite", "all", n1, n1, 0))
+        _append_ckpt(spark, lineage_path, run_id, rows)
     return spark.read.parquet(out_path)
 
 

@@ -10,8 +10,9 @@ filesystem round-trips (master_RDF_fix-validate-normalize.sh:178-201):
       → enrich (generated rows, unions)
       → finalize (dedupe shuffle) → write partitionBy(graph)
 
-plus the owl:sameAs alias edges feeding connected-components for the
-entity→canonical map (written alongside the graph table).
+The owl:sameAs alias edges also feed connected-components for the
+entity→canonical map (:func:`build_canonical_map`), a separate plan that
+``run_pipeline`` does not write.
 """
 
 from __future__ import annotations
@@ -181,13 +182,19 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
     append the per-stage accounting rows every production run of the
     reference produces (validateRDFs.sh:187-205): input-gate quarantine
     counts, extraction row counts, P4/P5 drop counts, and materialized
-    output count.
+    output count. The three rows (gate, extract_canonicalize,
+    materialize) go to lineage in ONE append after the graph write; their
+    counts are observed on the writes the run makes anyway (for the
+    quarantined count, see below).
 
     The S4 input gate (sources.readers.gate_well_formed — the
     reference's MIME check, fixRDF…:287,319-334) runs FIRST: rows
     violating the input contract (null keys, negative turn_idx, null
     text) are split off, optionally written to ``quarantine_path``, and
-    counted to lineage — never fed to extraction, never fatal."""
+    counted to lineage — never fed to extraction, never fatal. With a
+    ``quarantine_path`` the quarantined count is observed on that write;
+    without one, a lineage run counts the quarantined rows with one
+    filtered scan of the input."""
     import uuid
 
     from ..operators.materialize import write_graph_table
@@ -196,8 +203,10 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
     transcripts, quarantined = gate_well_formed(transcripts)
     n_bad = 0
     if quarantine_path is not None:
-        quarantined.write.mode("overwrite").parquet(quarantine_path)
-        n_bad = spark.read.parquet(quarantine_path).count()  # footer-only
+        obs_bad = Observation(f"quarantine_{uuid.uuid4().hex}")
+        (quarantined.observe(obs_bad, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(quarantine_path))
+        n_bad = int(obs_bad.get["n"])
     elif lineage_path is not None:
         n_bad = quarantined.count()  # pushed-down filter scan of the source
 
@@ -226,16 +235,15 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
         # "gate absent" (the reference's validateRDFs tally likewise
         # emits a row regardless of the count).
         n_ok = int(obs_gate.get["n"])
-        _append_ckpt(spark, lineage_path, run_id, "gate", "all",
-                     n_ok + n_bad, n_ok, n_bad, "done")
-        _append_ckpt(spark, lineage_path, run_id, "extract_canonicalize", "all",
-                     n_in, n_in - n_p4 - n_p5, n_p4 + n_p5, "done")
         # materialize's true input is the pre-dedupe union (canonical +
         # sameAs + generated rows — observed on the same write action);
         # dropped = in − out keeps the rows_in == rows_out + rows_dropped
         # invariant the extract_canonicalize row establishes
         n_mat_in = int(metrics["pre_final"].get["n"])
         n_final = int(obs_final.get["n"])
-        _append_ckpt(spark, lineage_path, run_id, "materialize", "all",
-                     n_mat_in, n_final, n_mat_in - n_final, "done")
+        _append_ckpt(spark, lineage_path, run_id, [
+            ("gate", "all", n_ok + n_bad, n_ok, n_bad),
+            ("extract_canonicalize", "all", n_in, n_in - n_p4 - n_p5, n_p4 + n_p5),
+            ("materialize", "all", n_mat_in, n_final, n_mat_in - n_final),
+        ])
     return spark.read.parquet(out_path)

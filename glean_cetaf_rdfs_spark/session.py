@@ -11,8 +11,11 @@ from __future__ import annotations
 import os
 import sys
 from pathlib import Path
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # repo root (parent of this package) — shipped to Python workers so the
 # extraction UDFs can unpickle package functions regardless of the
@@ -59,6 +62,25 @@ def app_scratch_path(spark: SparkSession, name: str) -> str:
         _APP_SCRATCH_REGISTERED.add(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: str | StructType) -> DataFrame:
+    """Rows the driver already holds as an Arrow-backed local relation.
+
+    The rows cross to the JVM as one Arrow stream and the plan scans them
+    as a ``LocalTableScan``, so a job that reads them (a broadcast, an
+    append) runs in the JVM alone, and a filter or projection on them
+    folds at optimization time. ``createDataFrame(<list>)`` instead plans
+    a pickled Python RDD (``Scan ExistingRDD``) that forks Python workers
+    on every job that reads it. The ``pyarrow.Table`` form is used rather than a pandas
+    frame because it has no silent non-Arrow fallback and keeps zero-row
+    tables local too. ``schema`` is a DDL string or a ``StructType``;
+    column types are cast to it."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    cols = [[r[i] for r in rows] for i in range(len(schema.names))]
+    return spark.createDataFrame(pa.table(cols, names=schema.names), schema=schema)
 
 
 def get_spark(

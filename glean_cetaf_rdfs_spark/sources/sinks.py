@@ -4,7 +4,8 @@ The reference appends per-worker shard files, posts TriG chunks to a
 Fuseki named graph, and tees logs/errors to side files. Engine versions:
 partitioned columnar writes with bounded file sizes (patternsplit.awk's
 50 MB record-boundary chunking → ``maxRecordsPerFile``; Spark never
-splits a row), and the lineage table instead of log files.
+splits a row). The lineage table that replaces the log files is
+appended by ``streaming.checkpoint`` only.
 """
 
 from __future__ import annotations
@@ -74,8 +75,3 @@ def write_trig_text(triples: DataFrame, path: str, mode: str = "overwrite") -> N
     (grouped.select("graph", block.alias("value"))
      .write.mode(mode).partitionBy("graph").text(path))
 
-
-def append_lineage(df: DataFrame, path: str) -> None:
-    """S10 — log/error side-channel → append-only lineage/metrics table
-    (get_RDF4domain…:428-438; JACQ.sh:875-892)."""
-    df.write.mode("append").parquet(path)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 from ..plans.pipeline import build_triples
+from ..session import local_frame
 
 CKPT_SCHEMA = ("run_id string, stage string, partition_key string, "
                "rows_in long, rows_out long, rows_dropped long, "
@@ -40,15 +41,18 @@ def bucket_of(conv_id_col, n_buckets: int):
 def read_checkpoint(spark: SparkSession, ckpt_path: str) -> DataFrame:
     if os.path.exists(ckpt_path):
         return spark.read.parquet(ckpt_path)
-    return spark.createDataFrame([], schema=CKPT_SCHEMA)
+    return local_frame(spark, [], CKPT_SCHEMA)
 
 
-def _append_ckpt(spark: SparkSession, ckpt_path: str, run_id: str, stage: str,
-                 key: str, rows_in: int, rows_out: int, dropped: int,
-                 status: str) -> None:
-    row = [(run_id, stage, key, rows_in, rows_out, dropped, status,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None))]
-    spark.createDataFrame(row, schema=CKPT_SCHEMA).write.mode("append").parquet(ckpt_path)
+def _append_ckpt(spark: SparkSession, ckpt_path: str, run_id: str,
+                 rows: list[tuple[str, str, int, int, int]]) -> None:
+    """Append ``done`` rows, each (stage, partition_key, rows_in,
+    rows_out, rows_dropped), to the checkpoint table in one write of one
+    file, all stamped with the same ``updated_ts``."""
+    now = dt.datetime.now(dt.timezone.utc)
+    batch = [(run_id, *r, "done", now) for r in rows]
+    (local_frame(spark, batch, CKPT_SCHEMA).coalesce(1)
+     .write.mode("append").parquet(ckpt_path))
 
 
 def done_buckets(spark: SparkSession, ckpt_path: str, run_id: str) -> set[int]:
@@ -96,8 +100,10 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
          .parquet(f"{out_path}/bucket={b}"))
         rows_in = int(obs_in.get["n"])
         rows_out = int(obs_out.get["n"])
-        _append_ckpt(spark, ckpt_path, run_id, "materialize", str(b),
-                     rows_in, rows_out, 0, "done")
+        # one append per bucket: the done row must be durable before
+        # the next bucket starts, or a crash would redo this bucket
+        _append_ckpt(spark, ckpt_path, run_id,
+                     [("materialize", str(b), rows_in, rows_out, 0)])
         completed += 1
         if fail_after_bucket is not None and completed >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {b}")

@@ -214,3 +214,73 @@ def test_main_one_leg_death_keeps_other_leg(monkeypatch, capsys):
     assert res["low"]["triples_per_sec"] == 10.0
     assert res["high"]["wall_sec"] is None
     assert "hi TimeoutExpired" in res["error"]
+
+
+@pytest.mark.parametrize("raise_on", [3, 4])
+def test_main_remeasure_raise_keeps_measured_legs(monkeypatch, capsys, raise_on):
+    """An under-target pair is re-measured once; a re-measure call that
+    raises (run_level refusing to start near the deadline) must not crash
+    main(): the legs already measured stay in the final JSON line, and
+    the error is recorded. Calls 1-2 are the hi and lo legs, 3-4 the
+    re-measure of lo then hi."""
+    import sys
+
+    legs = {2: {"cores": 2, "n_turns": 1, "n_triples": 10, "wall_sec": 1.0,
+                "walls": [1.0, 1.0], "triples_per_sec": 10.0,
+                "turns_per_sec": 1.0},
+            8: {"cores": 8, "n_turns": 1, "n_triples": 10, "wall_sec": 0.5,
+                "walls": [0.5, 0.5], "triples_per_sec": 20.0,
+                "turns_per_sec": 2.0}}  # efficiency 0.5: under target
+    calls = []
+
+    def fake_measure(cores, n_convs, runs, deadline, **kw):
+        calls.append(cores)
+        if len(calls) == raise_on:
+            raise subprocess.TimeoutExpired(["leg"], 299)
+        return dict(legs[cores])
+
+    monkeypatch.setattr(BS, "measure_leg", fake_measure)
+    monkeypatch.setattr(BS.subprocess, "run",
+                        lambda *a, **k: subprocess.CompletedProcess(a, 0))
+    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "480000", "2", "2", "4"])
+    BS.main()
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert calls == [8, 2, 2, 8][:raise_on]
+    # the first pass's walls survive; a lo re-measure that landed before
+    # the hi one raised is pooled, never dropped
+    assert res["low"]["walls"] == [1.0, 1.0] * (raise_on - 2)
+    assert res["high"]["walls"] == [0.5, 0.5]
+    assert res["scaling_efficiency"] == 0.5 and res["pass"] is False
+    assert res["measure_passes"] == 1
+    assert "re-measure TimeoutExpired" in res["error"]
+
+
+def test_measure_leg_rebatch_gate_respects_run_level_floor(monkeypatch):
+    """measure_leg re-batches an inconsistent leg only when run_level
+    could start an attempt (≥ 300 s left). With 200 s left after the
+    first batch and a 10 s min-wall (2.5 × 10 s would fit), the first
+    measurement is returned as is, not lost to run_level's raise."""
+    import time
+
+    clock = {"now": 1000.0, "left_after": 200.0}
+    calls = []
+
+    def fake_run_level(cores, n_convs, runs, deadline=None):
+        if deadline - clock["now"] < 300:  # run_level's own floor
+            raise subprocess.TimeoutExpired(["leg"], 0)
+        calls.append(runs)
+        clock["now"] = deadline - clock["left_after"]
+        return {"cores": cores, "n_turns": 1, "n_triples": 10,
+                "wall_sec": 10.0, "walls": [10.0, 20.0],
+                "triples_per_sec": 1.0, "turns_per_sec": 0.1}
+
+    monkeypatch.setattr(time, "monotonic", lambda: clock["now"])
+    monkeypatch.setattr(BS, "run_level", fake_run_level)
+    m = BS.measure_leg(2, 1, runs=2, deadline=1400.0)
+    assert calls == [2] and m["walls"] == [10.0, 20.0]
+    # with ample budget the inconsistent leg is re-batched (the pooled
+    # walls then agree, which ends the batching)
+    calls.clear()
+    clock.update(now=1000.0, left_after=5000.0)
+    m = BS.measure_leg(2, 1, runs=2, deadline=10_000.0)
+    assert calls == [2, 2] and m["walls"] == [10.0, 20.0, 10.0, 20.0]

@@ -4,6 +4,7 @@ progress/ETA report."""
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 
 from pyspark.sql import functions as F
@@ -21,6 +22,12 @@ def test_batch_lineage_rows_and_scratch_bounded(spark, tiny_df, tmp_path):
     # gate row is written even on a clean run (rows_dropped=0) so
     # consumers can tell "gate ran, zero quarantined" from "gate absent"
     assert set(rows) == {"gate", "extract_canonicalize", "materialize"}
+    assert len(glob.glob(ck + "/*.parquet")) == 1  # one append per run
+    # stamped with the current instant: collect() renders it in the
+    # process's local zone, so a session-TZ shift on the way in shows
+    now = dt.datetime.now(dt.timezone.utc)
+    for r in rows.values():
+        assert abs(r["updated_ts"].astimezone(dt.timezone.utc) - now) < dt.timedelta(seconds=60)
     g = rows["gate"]
     assert g["rows_dropped"] == 0 and g["rows_in"] == g["rows_out"]
     ec = rows["extract_canonicalize"]
@@ -50,6 +57,37 @@ def test_compact_buckets_restores_uniqueness(spark, tiny_df, tmp_path):
     want = {tuple(r) for r in one_shot.select(*cols).collect()}
     assert got == want
     assert compacted.count() == len(want)  # row-unique, not just set-equal
+
+
+def test_small_tables_plan_as_local_relations(spark, tiny_df, tmp_path,
+                                              monkeypatch):
+    """The entity dictionary and the lineage rows are driver-held tables:
+    they must plan as an Arrow-backed ``LocalTableScan``, never as a
+    pickled Python RDD (``Scan ExistingRDD``), whose every job forks
+    Python workers. Building them from a list or a pandas frame again
+    would bring that RDD back without an error (pandas' Arrow path
+    falls back to it on zero rows or a conversion failure), so the plan
+    shape is asserted."""
+    from glean_cetaf_rdfs_spark.streaming import checkpoint
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    built = plan(build_triples(tiny_df))
+    assert "LocalTableScan" in built and "ExistingRDD" not in built
+
+    real, appended = checkpoint.local_frame, []
+
+    def spy(*args):
+        appended.append(real(*args))
+        return appended[-1]
+
+    monkeypatch.setattr(checkpoint, "local_frame", spy)
+    run_pipeline(spark, tiny_df, str(tmp_path / "g"),
+                 lineage_path=str(tmp_path / "lin"))
+    assert len(appended) == 1
+    lineage = plan(appended[0])
+    assert "LocalTableScan" in lineage and "ExistingRDD" not in lineage
 
 
 def test_progress_report_eta(spark):
@@ -88,8 +126,7 @@ def test_run_pipeline_gates_malformed_input(spark, tiny_df, tmp_path):
     cols = ["graph", "subj", "pred", "obj", "obj_is_iri"]
     assert ({tuple(r) for r in final.select(*cols).collect()}
             == {tuple(r) for r in clean.select(*cols).collect()})
-    assert spark.read.parquet(quar).count() == 2
     rows = {r["stage"]: r for r in spark.read.parquet(ck).collect()}
     g = rows["gate"]
-    assert g["rows_dropped"] == 2
+    assert spark.read.parquet(quar).count() == g["rows_dropped"] == 2
     assert g["rows_in"] == g["rows_out"] + g["rows_dropped"]
